@@ -198,6 +198,20 @@ def lsh_candidate_pairs(
     )
 
 
+def _cut_lineage(df: DataFrame) -> DataFrame:
+    """Eagerly materialize ``df`` and return a frame whose plan starts
+    at the materialized data. When a reliable checkpoint dir is set
+    (``sc.setCheckpointDir``), ``checkpoint()`` writes it to the shared
+    store, where it survives executor loss. With no dir set, the
+    fallback is ``localCheckpoint()`` — NOTE its trade-off: partitions
+    become NON-recomputable, so losing an executor fails the job instead
+    of recomputing; acceptable on a single node / short iteration, but
+    set a checkpoint dir at cluster scale."""
+    if df.sparkSession.sparkContext.getCheckpointDir() is not None:
+        return df.checkpoint(eager=True)
+    return df.localCheckpoint(eager=True)
+
+
 def connected_components(pairs: DataFrame, max_iter: int = 20) -> DataFrame:
     """Union-find over candidate pairs as iterative label propagation:
     every node starts as its own component; each round joins the
@@ -212,7 +226,23 @@ def connected_components(pairs: DataFrame, max_iter: int = 20) -> DataFrame:
     CC loop (GraphFrames' algorithm reduced to DataFrames).
 
     ``pairs``: (id_a, id_b). Returns (node_id, component) where
-    component = min node id in the cluster.
+    component = min node id in the cluster. A pair with a NULL endpoint
+    is dropped on entry: it links nothing, and its non-NULL endpoint
+    gets a label only if some other pair names it. (The LSH candidate
+    pairs never carry a NULL id: ``collect_list`` skips them.)
+
+    Entry materialization: ``pairs`` is usually lazy (text → MinHash →
+    LSH buckets), and every round's plan reads the edge relation. So the
+    symmetric edges plus one self-loop per node are built in ONE pass
+    over ``pairs`` and cut from their lineage (:func:`_cut_lineage`,
+    the same checkpoint rule the loop applies every 4 rounds). The
+    upstream pipeline runs once per call, and every later plan — each
+    round's join and agg, and whatever the caller builds on the returned
+    labels — starts from a checkpoint leaf instead of re-embedding and
+    re-analyzing the LSH subtree. The node set is the self-loop rows.
+    With no checkpoint dir set, both cuts are ``localCheckpoint()``:
+    cheap, but not recomputable after an executor loss (see
+    :func:`_cut_lineage`) — set a checkpoint dir at cluster scale.
 
     Per-round shape: ONE join. A self-loop edge per node makes the
     propagation groupBy see the node's own previous label alongside its
@@ -221,23 +251,30 @@ def connected_components(pairs: DataFrame, max_iter: int = 20) -> DataFrame:
     convergence flag (new < old) all come out of the SAME aggregation —
     no second join against the previous labels for the update, and no
     third join for the changed-count. Measured 0.55× the two-join loop
-    at sf0.1 (tools/probe_cc.py, labels bit-identical, same 5 rounds).
+    at sf0.1 (OPTIMIZATION_r15.md, labels bit-identical, same 5 rounds).
     """
-    both = pairs.select(F.col("id_a").alias("src"), F.col("id_b").alias("dst")).unionByName(
-        pairs.select(F.col("id_b").alias("src"), F.col("id_a").alias("dst"))
+    ends = pairs.filter(F.col("id_a").isNotNull() & F.col("id_b").isNotNull())
+
+    def edge(s: str, d: str) -> Column:
+        return F.struct(F.col(s).alias("src"), F.col(d).alias("dst"))
+
+    # both directions of every pair plus a self-loop on each endpoint;
+    # distinct() collapses a reflexive pair and repeated self-loops, so
+    # every node carries exactly one (x, x) edge. Labels ignore edge
+    # multiplicity anyway: min over neighborhood ∪ self.
+    edges = _cut_lineage(
+        ends.select(
+            F.explode(
+                F.array(edge("id_a", "id_b"), edge("id_b", "id_a"),
+                        edge("id_a", "id_a"), edge("id_b", "id_b"))
+            ).alias("e")
+        )
+        .select("e.src", "e.dst")
+        .distinct()
     )
-    # nodes from the UNFILTERED pair set (a node appearing only in a
-    # reflexive pair must still get a label); the symmetric edge set
-    # drops reflexive rows — the self-loop union below re-adds exactly
-    # one (x, x) per node, so a reflexive input pair no longer leaves a
-    # duplicate (x, x) edge in the cached relation (ADVICE r15). Labels
-    # unchanged: min over neighborhood ∪ self ignores multiplicity.
-    nodes = both.select(F.col("src").alias("node_id")).distinct()
-    sym = both.filter(F.col("src") != F.col("dst")).distinct()
-    edges = sym.unionByName(
-        nodes.select(F.col("node_id").alias("src"), F.col("node_id").alias("dst"))
-    ).cache()
-    labels = nodes.withColumn("component", F.col("node_id"))
+    labels = edges.filter(F.col("src") == F.col("dst")).select(
+        F.col("src").alias("node_id"), F.col("src").alias("component")
+    )
     prev_cached = None
     for it in range(max_iter):
         # propagate: new label for dst = min(label[src]) over in-edges,
@@ -265,21 +302,11 @@ def connected_components(pairs: DataFrame, max_iter: int = 20) -> DataFrame:
         prev_cached = staged
         # every few rounds, truncate the lineage: each round's plan
         # embeds the previous labels (propagation join), so un-truncated
-        # lineage grows per round. When a reliable checkpoint dir is
-        # configured (sc.setCheckpointDir), use checkpoint(): the data
-        # lands on the shared store and survives executor loss. With no
-        # dir set, fall back to localCheckpoint — NOTE its trade-off:
-        # partitions become NON-recomputable, so losing an executor
-        # fails the job instead of recomputing; acceptable on a single
-        # node / short iteration, but set a checkpoint dir at cluster
-        # scale. Both are eager here (the agg above materialized the
-        # data) and cut the logical plan back to the checkpointed RDD.
+        # lineage grows per round. Eager here too (the agg above
+        # materialized the data), and it cuts the plan back to the
+        # checkpointed RDD.
         if (it + 1) % 4 == 0:
-            sc = new_labels.sparkSession.sparkContext
-            if sc.getCheckpointDir() is not None:
-                cp = new_labels.checkpoint(eager=True)
-            else:
-                cp = new_labels.localCheckpoint(eager=True)
+            cp = _cut_lineage(new_labels)
             staged.unpersist()  # checkpoint storage supersedes the cache
             prev_cached = None
             new_labels = cp
@@ -287,15 +314,12 @@ def connected_components(pairs: DataFrame, max_iter: int = 20) -> DataFrame:
         if not changed:
             break
     else:
-        edges.unpersist()
         raise RuntimeError(
             f"connected_components: labels still changing after "
             f"{max_iter} rounds (graph diameter exceeds max_iter) — "
             f"raise max_iter"
         )
-    # the returned labels stay cached (the caller consumes them next);
-    # edges are only needed if lineage recomputes
-    edges.unpersist()
+    # the returned labels stay cached (the caller consumes them next)
     return labels
 
 

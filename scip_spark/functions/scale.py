@@ -17,13 +17,22 @@ def ensure_parallelism(df: DataFrame, target: int | None = None) -> DataFrame:
     than cores. Compute-bound stages (hash-heavy dedup, per-record
     kernels) over a small file otherwise run on one task — a 7 MB
     parquet of documents is one 128 MB-split partition but minutes of
-    md5 work. At real scale inputs already carry enough partitions and
-    this is a no-op, so the 100 TB path never pays the shuffle.
+    md5 work. An input that already carries enough partitions passes
+    through without the shuffle.
+
+    A plan under adaptive execution (one with an exchange, AQE on)
+    passes through untouched: asking its RDD for a partition count would
+    make AQE execute every upstream shuffle stage and throw the result
+    away. Any other plan (a scan with narrow operators, or AQE off) is
+    inspected; its partition count comes from the file splits or the
+    static shuffle partitions, and reading it runs no job.
 
     Streaming DataFrames pass through untouched: partition inspection
     is illegal pre-start, and a stream's parallelism is governed by the
     source (maxFilesPerTrigger etc.), not a static repartition."""
     if df.isStreaming:
+        return df
+    if df._jdf.queryExecution().executedPlan().nodeName() == "AdaptiveSparkPlan":
         return df
     sc = df.sparkSession.sparkContext
     target = target or sc.defaultParallelism

@@ -559,6 +559,30 @@ def test_ensure_parallelism_noop_at_scale(spark):
     assert bumped.rdd.getNumPartitions() >= spark.sparkContext.defaultParallelism
 
 
+def _jobs_started(spark) -> int:
+    """Spark jobs this application has started so far, from the status
+    store (job ids are sequential; the store keeps only the newest, so
+    the largest id counts them where the list length would saturate)."""
+    jsc = spark.sparkContext._jsc.sc()
+    jsc.listenerBus().waitUntilEmpty()
+    jobs = jsc.statusStore().jobsList(None)
+    return max((jobs.apply(i).jobId() + 1 for i in range(jobs.size())), default=0)
+
+
+def test_ensure_parallelism_runs_no_job_on_shuffled_input(spark):
+    """An input behind an exchange is AQE-wrapped; its partition count
+    is only known after AQE runs the upstream shuffle stages, so asking
+    for it would start a job whose result is thrown away. The floor
+    passes such an input through without starting any job."""
+    from scip_spark.functions.scale import ensure_parallelism
+
+    shuffled = spark.range(0, 1_000, 1, 4).groupBy((F.col("id") % 7).alias("k")).count()
+    before = _jobs_started(spark)
+    out = ensure_parallelism(shuffled)
+    assert _jobs_started(spark) == before
+    assert out is shuffled
+
+
 def test_compact_parquet_reduces_file_count(spark, tmp_path):
     """A fragmented write (64 tiny files) compacts to the byte-sized
     target with identical contents and no wide shuffle in the plan."""
@@ -624,20 +648,66 @@ def test_connected_components_uses_reliable_checkpoint_when_dir_set(spark, tmp_p
 
     sc = spark.sparkContext
     assert sc.getCheckpointDir() is None
-    sc.setCheckpointDir(str(tmp_path / "ckpt"))
+    edges = spark.createDataFrame(
+        [(i, i + 1) for i in range(0, 40, 2)] + [(1, 2), (21, 22)],
+        "id_a long, id_b long",
+    )
+    # the other side of the gate: no dir, so the entry materialization
+    # and the loop's lineage cuts are localCheckpoints
+    local = {r["node_id"]: r["component"] for r in connected_components(edges).collect()}
+    ckpt = tmp_path / "ckpt"
+    sc.setCheckpointDir(str(ckpt))
     try:
-        edges = spark.createDataFrame(
-            [(i, i + 1) for i in range(0, 40, 2)] + [(1, 2), (21, 22)],
-            "id_a long, id_b long",
-        )
         labels = {r["node_id"]: r["component"] for r in connected_components(edges).collect()}
         # chain 0-1-2-3 merged via (1,2); components labeled by min node
         assert labels[3] == 0 and labels[23] == 20
+        assert labels == local
+        # the reliable path really wrote checkpoint data under the dir
+        assert any(ckpt.rglob("rdd-*"))
     finally:
         # restore "no checkpoint dir" so other tests keep exercising the
         # localCheckpoint fallback ($-named Scala setter needs getattr)
         getattr(sc._jsc.sc(), "checkpointDir_$eq")(spark._jvm.scala.Option.empty())
         assert sc.getCheckpointDir() is None
+
+
+def test_cc_runs_its_input_once(spark):
+    """The candidate pairs are usually a lazy LSH pipeline. CC
+    materializes them once at entry, so that pipeline runs once per
+    call (not once for the edges and again for the nodes), and the
+    returned labels' plan starts from a checkpoint, not from it."""
+    from scip_spark.functions.dedup import connected_components
+
+    rows = spark.sparkContext.accumulator(0)
+
+    def counted(batches):
+        for b in batches:
+            rows.add(len(b))
+            yield b
+
+    raw = spark.createDataFrame(
+        [(i, i + 1) for i in range(0, 40, 2)] + [(1, 2), (21, 22)],
+        "id_a long, id_b long",
+    )
+    pairs = raw.mapInPandas(counted, raw.schema)
+    labels = connected_components(pairs)
+    assert len(labels.collect()) == 40
+    assert rows.value == raw.count()
+    assert "MapInPandas" not in labels._jdf.queryExecution().optimizedPlan().toString()
+
+
+def test_cc_drops_pairs_with_null_endpoint(spark):
+    """A pair with a NULL id links nothing: it is dropped on entry, so a
+    node named only by such pairs gets no label, and a NULL id is never
+    a node."""
+    from scip_spark.functions.dedup import connected_components
+
+    pairs = spark.createDataFrame(
+        [(1, 2), (2, 3), (4, None), (None, 5), (None, None), (3, None), (6, 7)],
+        "id_a long, id_b long",
+    )
+    got = {r["node_id"]: r["component"] for r in connected_components(pairs).collect()}
+    assert got == {1: 1, 2: 1, 3: 1, 6: 6, 7: 6}
 
 
 def test_qsketch_quantile_accuracy_and_mergeability(spark):
