@@ -100,6 +100,8 @@ HEADLINE = [
 #: in r13 — they add fixed wall to the process and pre-warm JVM/codegen
 #: relative to r12-and-earlier "passes" arrays; compare first-pass
 #: values across that boundary with this in mind.
+#: r14/r15 notes (session-shared builds paid by each family's first
+#: query; SINGLE_PASS min-of-2): ``git show 97a2fc2:bench.py``.
 HEADLINE_CHANGES = "r16: ms precision; +cold_total (pass-1 builds)"
 
 # heavyweight end-to-end pipelines: one timed pass only (their runtime
@@ -322,10 +324,8 @@ def main() -> None:
     # build cost from the warm headline. Report both: per-query cold =
     # pass 1, warm = min, and cold_total = warm total + Σ(cold − warm)
     # — the number a single cold session would pay.
-    cold = {n: v[0] for n, v in passes.items()}
-    cold_delta = round(
-        sum(max(0.0, cold[n] - timings[n]) for n in cold if n in timings), 3
-    )
+    cold = {n: v[0] for n, v in passes.items() if n in timings}
+    cold_delta = round(sum(max(0.0, cold[n] - timings[n]) for n in cold), 3)
     cold_total = round(total + cold_delta, 3)
     out = {
         "metric": "headline_queries_total_wall",

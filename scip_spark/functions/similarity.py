@@ -1412,9 +1412,8 @@ def graph_topk(
         )
 
     wq = W.partitionBy("q_id").orderBy(F.col("sim").desc(), F.col("c_id").asc())
-    # sim desc as a tertiary key (ADVICE r15): free under the identical-
-    # duplicate invariant, and preserves max-sim selection if score()
-    # ever becomes approximate/nondeterministic
+    # sim desc as a tertiary key (ADVICE r15): tie-break hygiene only;
+    # the dedup still requires duplicates to carry identical sim
     w_dedup = W.partitionBy("q_id").orderBy(
         F.col("c_id").asc(), F.col("exp").desc(), F.col("sim").desc()
     )

@@ -83,17 +83,27 @@ def lang_scores(text: Column | str) -> dict[str, Column]:
 
 
 def lang_id(text: Column | str) -> Column:
-    """Argmax language by marker hits; deterministic tie-break by the
-    fixed language order; 'unknown' when nothing matches."""
-    scores = lang_scores(text)
-    best_lang = F.lit("unknown")
-    best_score = F.lit(0).cast("long")
-    for lang in LANG_MARKERS:  # later languages win only on strict >
-        s = scores[lang]
-        take = s > best_score
-        best_lang = F.when(take, F.lit(lang)).otherwise(best_lang)
-        best_score = F.when(take, s).otherwise(best_score)
-    return best_lang
+    """Argmax language by marker hits on lowercased whitespace tokens.
+
+    One flat expression over the scores with a sentinel in front:
+    ``element_at(names, array_position(scores, array_max(scores)))``
+    where ``scores = [0, s_en, …, s_zh]`` and
+    ``names = ['unknown', 'en', …, 'zh']``. ``array_position`` returns
+    the FIRST maximum, so the earliest language in ``LANG_MARKERS``
+    wins a tie; with no marker hit every score is 0 and the sentinel
+    wins, giving 'unknown'. NULL text also gives 'unknown' (a NULL
+    score is skipped by ``array_max`` and never equals the max).
+
+    The tree stays linear in the language count: the score array
+    appears twice, so five languages give 10 marker filters. A
+    ``when(s > best, …).otherwise(best)`` fold references its
+    accumulator twice per step, so its tree doubles per language (57
+    marker filters for five). The size is paid per row, and twice when
+    a filter on the result is pushed below the projection that
+    computes it (a scan-level Filter evaluates the gate again)."""
+    scores = F.array(F.lit(0).cast("long"), *lang_scores(text).values())
+    names = F.array(*[F.lit(n) for n in ("unknown", *LANG_MARKERS)])
+    return F.element_at(names, F.array_position(scores, F.array_max(scores)).cast("int"))
 
 
 def fingerprint(text: Column | str) -> Column:

@@ -14,7 +14,7 @@ from scip_spark.functions.text import (
     LANG_MARKERS,
     STOPWORDS,
     fingerprint,
-    lang_scores,
+    lang_id,
 )
 from scip_spark.queries import register, tbl
 
@@ -81,8 +81,8 @@ def _langid_sql() -> str:
     )
     langs = list(LANG_MARKERS)
     greatest = "GREATEST(" + ", ".join(f"s_{l}" for l in langs) + ")"
-    # first language (in marker order) reaching the max wins — the same
-    # tie-break as the Spark fold in text.lang_id
+    # first language (in marker order) reaching the max wins, and NULL
+    # text (NULL scores) is 'unknown' — the contract of text.lang_id
     whens = "\n                ".join(
         f"WHEN s_{l} = m THEN '{l}'" for l in langs
     )
@@ -99,7 +99,7 @@ def _langid_sql() -> str:
       SELECT *, {greatest} AS m FROM scored
     )
     SELECT doc_id, lang,
-           CASE WHEN m <= 0 THEN 'unknown'
+           CASE WHEN COALESCE(m, 0) <= 0 THEN 'unknown'
                 {whens}
            END AS pred_lang
     FROM best
@@ -109,13 +109,7 @@ def _langid_sql() -> str:
 @register("lang_id_heuristic", _langid_sql(), doc="n-gram/stopword heuristic language ID")
 def lang_id_heuristic(spark, sf_dir):
     docs = tbl(spark, sf_dir, "documents")
-    scores = lang_scores("text")
-    langs = list(LANG_MARKERS)
-    m = F.greatest(*[scores[l] for l in langs])
-    pred = F.when(m <= 0, F.lit("unknown"))
-    for l in langs:
-        pred = pred.when(scores[l] == m, F.lit(l))
-    return docs.select("doc_id", "lang", pred.alias("pred_lang"))
+    return docs.select("doc_id", "lang", lang_id("text").alias("pred_lang"))
 
 
 @register(

@@ -43,6 +43,67 @@ def test_lang_id_column(spark):
     assert got[3] == "unknown"
 
 
+def _lang_id_reference(text):
+    """Pure-Python lang_id: marker hits on lowercased whitespace tokens,
+    first maximum in LANG_MARKERS order wins, 'unknown' on no hit."""
+    from scip_spark.functions.text import LANG_MARKERS
+
+    toks = [t.lower() for t in (text or "").split()]
+    best, best_n = "unknown", 0
+    for lang, words in LANG_MARKERS.items():
+        n = sum(t in words for t in toks)
+        if n > best_n:
+            best, best_n = lang, n
+    return best
+
+
+def test_lang_id_matches_python_reference(spark):
+    import random
+
+    from scip_spark.functions.text import LANG_MARKERS, lang_id
+
+    rng = random.Random(17)
+    langs = list(LANG_MARKERS)
+    vocab = [w for ws in LANG_MARKERS.values() for w in ws] + ["fox", "xyz", "42"]
+
+    def case(w):
+        return rng.choice([w, w.upper(), w.capitalize()])
+
+    texts = []
+    for _ in range(150):
+        words = [case(rng.choice(vocab)) for _ in range(rng.randint(0, 9))]
+        texts.append(rng.choice([" ", "  ", "\t", "\n "]).join(words))
+    for _ in range(40):  # planted ties: equal hits for two or three languages
+        tied = rng.sample(langs, rng.randint(2, 3))
+        n = rng.randint(1, 3)
+        words = [case(rng.choice(LANG_MARKERS[l])) for l in tied for _ in range(n)]
+        rng.shuffle(words)
+        texts.append(" ".join(words + ["fox"] * rng.randint(0, 2)))
+    texts += ["", " ", "\t\n  ", None, "fox xyz", " The  DER "]
+
+    docs = spark.createDataFrame(
+        pd.DataFrame({"doc_id": range(len(texts)), "text": texts})
+    )
+    out = docs.select("doc_id", lang_id("text").alias("l")).toPandas()
+    got = dict(zip(out.doc_id, out.l))
+    want = {i: _lang_id_reference(t) for i, t in enumerate(texts)}
+    assert got == want
+    # every outcome is exercised, and the ties really are ties
+    assert set(want.values()) == {"unknown", *langs}
+    assert want[len(texts) - 1] == "en"  # one hit each: earliest language wins
+
+
+def test_lang_id_expression_stays_linear(spark):
+    """Each language's marker filter appears once per score array use
+    (array_position's array and array_max's); a fold referencing its
+    accumulator twice per step would double the tree per language."""
+    from scip_spark.functions.text import LANG_MARKERS, lang_id
+
+    docs = _docs(spark).select(lang_id("text").alias("l"))
+    analyzed = docs._jdf.queryExecution().analyzed().toString()
+    assert 0 < analyzed.count("array_contains") <= 2 * len(LANG_MARKERS)
+
+
 def test_minhash_signature_closed_form_matches_table(spark):
     from scip_spark.functions.dedup import (
         N_MINHASH,
