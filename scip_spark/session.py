@@ -72,6 +72,11 @@ def get_spark(
         # parquet reader rejects; read as long and convert (see
         # queries.load_events)
         "spark.sql.legacy.parquet.nanosAsLong": "true",
+        # generated classes are cached by source text; at Spark's default
+        # of 100 entries one corpus-curation pass (~130 distinct classes)
+        # evicts its own classes, so every repeat recompiles them in Janino
+        # and the JIT compiles them again, competing with the tasks for cores
+        "spark.sql.codegen.cache.maxEntries": "1000",
         "spark.driver.memory": os.environ.get("SPARK_GRAFT_DRIVER_MEM", "24g"),
     }
     if extra_conf:
