@@ -40,6 +40,17 @@ def map_events(
     within a stage but still serializes every intermediate batch
     through Arrow; composing in Python skips those intermediate hops.
 
+    The pixel loaders (``sources.filescan``) are ``map_events`` stages
+    too, so the file decode is the FIRST fused stage: decode →
+    illumination → segmentation → masks run in one Python worker per
+    task. Fusion saves more than the Arrow hops: every ``mapInPandas``
+    node is its own Python runner, and each runner pays a fixed setup
+    per task (0.1-0.25 s on Python 3.11 with the zipped pyspark and
+    py4j on the worker path, most of it ``importlib.invalidate_caches``
+    re-reading the zips' central directories). On many small tasks that
+    setup, not the tensor math, sets the wall, so fuse a new tensor step
+    onto its neighbour rather than add a stage.
+
     Fusion never crosses a persisted frame (the cache is the point of
     materialization), and any non-map_events transformation
     (withColumn, join, agg) naturally breaks the chain because only
@@ -61,14 +72,8 @@ def map_events(
     crosses Arrow, where the declared ``schema`` is enforced."""
     out_schema = schema if schema is not None else df.schema
 
-    chain = getattr(df, "_scip_fuse", None)
-    sl = df.storageLevel if chain is not None else None
-    if (
-        FUSE_STAGES
-        and chain is not None
-        and not (sl.useMemory or sl.useDisk or sl.useOffHeap)
-    ):
-        source, fns = chain[0], chain[1] + [batch_fn]
+    if fuses(df):
+        source, fns = df._scip_fuse[0], df._scip_fuse[1] + [batch_fn]
     else:
         source, fns = df, [batch_fn]
 
@@ -85,3 +90,13 @@ def map_events(
     result = source.mapInPandas(gen, schema=out_schema)
     result._scip_fuse = (source, fns)
     return result
+
+
+def fuses(df: DataFrame) -> bool:
+    """True when a ``map_events`` stage on ``df`` would compose into
+    ``df``'s own ``mapInPandas`` rather than add a new one: ``df`` is an
+    unpersisted ``map_events`` output and fusion is on."""
+    if not FUSE_STAGES or getattr(df, "_scip_fuse", None) is None:
+        return False
+    sl = df.storageLevel
+    return not (sl.useMemory or sl.useDisk or sl.useOffHeap)

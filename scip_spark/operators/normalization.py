@@ -59,7 +59,7 @@ def record_extents(df: DataFrame, key: str = "group") -> DataFrame:
 
 def group_extents(
     df: DataFrame,
-    key: str = "group",
+    key: str | list[str] = "group",
     cmin_col: str = "ch_min",
     cmax_col: str = "ch_max",
 ) -> DataFrame:
@@ -72,26 +72,32 @@ def group_extents(
     branch), the record pass is pure Catalyst — posexplode + groupBy,
     no Python, no tensor decode. Null array == record without pixels
     (explode drops it), null element == channel whose mask selects
-    nothing (filtered) — exactly ``record_extents``'s skip semantics."""
+    nothing (filtered) — exactly ``record_extents``'s skip semantics.
+    Only this path takes several grouping columns (``key`` as a list):
+    the fused multi-branch pipeline stacks its branches' extents by
+    method and aggregates them all at once."""
+    keys = [key] if isinstance(key, str) else list(key)
     if cmin_col in df.columns and cmax_col in df.columns:
         rec = (
             df.select(
-                key,
+                *keys,
                 F.posexplode(F.arrays_zip(cmin_col, cmax_col)).alias(
                     "channel", "mm"
                 ),
             )
             .select(
-                key,
+                *keys,
                 "channel",
                 F.col(f"mm.{cmin_col}").alias("cmin"),
                 F.col(f"mm.{cmax_col}").alias("cmax"),
             )
             .where(F.col("cmin").isNotNull())
         )
+    elif len(keys) == 1:
+        rec = record_extents(df, keys[0])
     else:
-        rec = record_extents(df, key)
-    return rec.groupBy(key, "channel").agg(
+        raise ValueError("several grouping keys need precomputed extent columns")
+    return rec.groupBy(*keys, "channel").agg(
         F.min("cmin").alias("gmin"), F.max("cmax").alias("gmax")
     )
 

@@ -187,20 +187,30 @@ def _build_fused(
                 for m in methods
                 for c in ("mask", "mask_shape", *ext_cols)
             ]
-            for c in soft:
-                fused = fused.withColumn(c, F.when(keep, F.col(c)))
+            fused = fused.withColumns({c: F.when(keep, F.col(c)) for c in soft})
 
-    # ---- per-branch group extents: pure-JVM aggs over one relation --
-    luts: dict[str, dict] = {}
+    # ---- every branch's group extents: ONE pure-JVM aggregate over the
+    # branches' extent columns stacked by method, ONE collect ----------
     if want_norm:
         key = cfg["normalization"].get("key", "group")
-        for m in methods:
-            rows = group_extents(
-                fused, key, cmin_col=f"ch_min__{m}", cmax_col=f"ch_max__{m}"
-            ).collect()
-            luts[m] = {
-                (r[key], r["channel"]): (r["gmin"], r["gmax"]) for r in rows
-            }
+        luts: dict[str, dict] = {m: {} for m in methods}
+        stacked = fused.select(
+            key,
+            F.inline(
+                F.array(
+                    *[
+                        F.struct(
+                            F.lit(m).alias("method"),
+                            F.col(f"ch_min__{m}").alias("ch_min"),
+                            F.col(f"ch_max__{m}").alias("ch_max"),
+                        )
+                        for m in methods
+                    ]
+                )
+            ),
+        )
+        for r in group_extents(stacked, [key, "method"]).collect():
+            luts[r["method"]][(r[key], r["channel"])] = (r["gmin"], r["gmax"])
         rescales = {
             m: make_rescale_batch(luts[m], key=key) for m in methods
         }

@@ -204,14 +204,33 @@ def ensure_event_columns(df):
     outputs (which carry only their own metadata + pixels) can flow
     into the stage operators. Existing columns are left untouched;
     extra loader columns (pivoted channel paths, regex groups) ride
-    along."""
+    along.
+
+    On a fusable ``map_events`` output (a pixel loader's) the nulls are
+    added as one more fused pandas step: a Catalyst ``withColumn``
+    there would end the fusion chain, and the loader's decode would run
+    in a Python worker of its own. Schema and values are the same on
+    both paths."""
     from pyspark.sql import functions as F
 
+    from scip_spark.operators import fuses, map_events
+
     existing = set(df.columns)
-    for field in EVENT_SCHEMA.fields:
-        if field.name not in existing:
-            df = df.withColumn(field.name, F.lit(None).cast(field.dataType))
-    return df
+    missing = [f for f in EVENT_SCHEMA.fields if f.name not in existing]
+    if not missing:
+        return df
+    if fuses(df):
+        names = [f.name for f in missing]
+
+        def add_nulls(pdf: pd.DataFrame) -> pd.DataFrame:
+            return pdf.assign(**{n: None for n in names})
+
+        return map_events(
+            df, add_nulls, T.StructType(list(df.schema.fields) + missing)
+        )
+    return df.withColumns(
+        {f.name: F.lit(None).cast(f.dataType) for f in missing}
+    )
 
 
 def events_to_pandas(records: list[dict]) -> pd.DataFrame:

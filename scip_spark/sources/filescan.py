@@ -22,7 +22,7 @@ from __future__ import annotations
 import glob as _glob
 import os
 import re
-from typing import Callable, Iterator
+from typing import Callable
 
 import numpy as np
 import pandas as pd
@@ -75,6 +75,40 @@ def tiff_meta(
     return piv.dropna()  # reference drops records with missing channels
 
 
+def _attach(
+    df: DataFrame,
+    cols: list[str],
+    read: Callable[..., np.ndarray],
+    channels: list[int] | None = None,
+) -> DataFrame:
+    """The pixel attach every loader shares: ``read(*row[cols])`` per
+    record → float32 C×H×W (channel-selected) ``pixels`` +
+    ``pixels_shape``, as a ``map_events`` stage so the decode fuses
+    with the tensor stages that follow it (one Python worker per task).
+    Columns the input already has keep their place; the ndarrays go to
+    Arrow through ``encode_series``."""
+    from scip_spark.operators import map_events
+    from scip_spark.schema import EVENT_SCHEMA, encode_series
+
+    out_schema = T.StructType(
+        list(df.schema.fields)
+        + [EVENT_SCHEMA[c] for c in ("pixels", "pixels_shape") if c not in df.columns]
+    )
+
+    def batch(pdf: pd.DataFrame) -> pd.DataFrame:
+        arrays = []
+        for vals in zip(*(pdf[c] for c in cols)):
+            a = np.asarray(read(*vals), dtype=np.float32)
+            arrays.append(a if channels is None else a[channels])
+        flat, shape = encode_series(arrays)
+        pdf = pdf.copy()
+        pdf["pixels"] = flat.values
+        pdf["pixels_shape"] = shape.values
+        return pdf
+
+    return map_events(df, batch, out_schema)
+
+
 def attach_pixels(
     df: DataFrame,
     path_cols: list[str],
@@ -82,26 +116,11 @@ def attach_pixels(
 ) -> DataFrame:
     """Pixel attach: read one file per channel column, stack C×H×W.
     ``reader(path) -> 2-D ndarray``. Runs as Arrow-batched IO."""
-    out_fields = [f for f in df.schema.fields] + [
-        T.StructField("pixels", T.ArrayType(T.FloatType())),
-        T.StructField("pixels_shape", T.ArrayType(T.IntegerType())),
-    ]
-    out_schema = T.StructType(out_fields)
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            flats, shapes = [], []
-            for _, row in pdf.iterrows():
-                planes = [np.asarray(reader(row[c]), dtype=np.float32) for c in path_cols]
-                stack = np.stack(planes)
-                flats.append(stack.ravel().tolist())
-                shapes.append(list(stack.shape))
-            pdf = pdf.copy()
-            pdf["pixels"] = pd.Series(flats, dtype=object).values
-            pdf["pixels_shape"] = pd.Series(shapes, dtype=object).values
-            yield pdf
-
-    return df.mapInPandas(gen, schema=out_schema)
+    return _attach(
+        df,
+        path_cols,
+        lambda *paths: np.stack([np.asarray(reader(p), dtype=np.float32) for p in paths]),
+    )
 
 
 def tiff_reader_stub(path: str) -> np.ndarray:
@@ -193,26 +212,12 @@ def zarr_attach_pixels(
 ) -> DataFrame:
     """``fetch(path, idx) -> flat ndarray``; reshaped via pixels_shape,
     channel-selected (zarr.py:52-61)."""
-    out_schema = T.StructType(
-        list(df.schema.fields) + [T.StructField("pixels", T.ArrayType(T.FloatType()))]
+    return _attach(
+        df,
+        ["path", "zarr_idx", "pixels_shape"],
+        lambda path, idx, shape: np.reshape(fetch(path, int(idx)), [int(s) for s in shape]),
+        channels,
     )
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            flats, shapes = [], []
-            for _, row in pdf.iterrows():
-                arr = np.asarray(fetch(row["path"], int(row["zarr_idx"])), dtype=np.float32)
-                arr = arr.reshape(row["pixels_shape"])
-                if channels is not None:
-                    arr = arr[channels]
-                flats.append(arr.ravel().tolist())
-                shapes.append(list(arr.shape))
-            pdf = pdf.copy()
-            pdf["pixels"] = pd.Series(flats, dtype=object).values
-            pdf["pixels_shape"] = pd.Series(shapes, dtype=object).values
-            yield pdf
-
-    return df.mapInPandas(gen, schema=out_schema)
 
 
 # ---------------------------------------------------------------------------
@@ -301,30 +306,12 @@ def czi_attach_pixels(
     cluster while the driver never touches pixel data."""
     if reader is None:  # aicsimageio if present, else the ZISRAW parser
         reader = default_czi_reader()
-    out_fields = [f for f in df.schema.fields] + [
-        T.StructField("pixels", T.ArrayType(T.FloatType())),
-        T.StructField("pixels_shape", T.ArrayType(T.IntegerType())),
-    ]
-    out_schema = T.StructType(out_fields)
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            flats, shapes = [], []
-            for _, row in pdf.iterrows():
-                arr = np.asarray(
-                    reader(row["path"], row["scene"], int(row["tile"])),
-                    dtype=np.float32,
-                )
-                if channels is not None:
-                    arr = arr[channels]
-                flats.append(arr.ravel().tolist())
-                shapes.append(list(arr.shape))
-            pdf = pdf.copy()
-            pdf["pixels"] = pd.Series(flats, dtype=object).values
-            pdf["pixels_shape"] = pd.Series(shapes, dtype=object).values
-            yield pdf
-
-    return df.mapInPandas(gen, schema=out_schema)
+    return _attach(
+        df,
+        ["path", "scene", "tile"],
+        lambda path, scene, tile: reader(path, scene, int(tile)),
+        channels,
+    )
 
 
 # ---------------------------------------------------------------------------

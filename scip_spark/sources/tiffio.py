@@ -124,36 +124,47 @@ def _packbits_encode(data: bytes) -> bytes:
     return bytes(out)
 
 
+#: the LZW string table right after a Clear: the 256 single bytes, then
+#: placeholders for ClearCode and EOI (never looked up as data)
+_LZW_ROOT: list[bytes] = [bytes([i]) for i in range(256)] + [b"", b""]
+
+
 def _lzw_decode(data: bytes) -> bytes:
     """TIFF-variant LZW (TIFF 6.0 §13): MSB-first bit packing, codes
     grow 9→12 bits with the EARLY-CHANGE rule (width bumps when the
-    table reaches 2^width − 1), ClearCode 256 / EOI 257."""
+    table reaches 2^width − 1), ClearCode 256 / EOI 257.
+
+    The hot loop keeps the table size, width and mask in locals and
+    refills the bit accumulator two bytes at a time, masked to the
+    bits still unread so it never grows."""
     CLEAR, EOI = 256, 257
     out = bytearray()
-    table: list[bytes] = []
-    width = 9
+    table = _LZW_ROOT.copy()
+    size, width, mask = 258, 9, 511
     prev: bytes | None = None
-
-    def reset() -> None:
-        nonlocal table, width, prev
-        table = [bytes([i]) for i in range(256)] + [b"", b""]
-        width = 9
-        prev = None
-
-    reset()
     acc = nbits = pos = 0
     n = len(data)
     while True:
-        while nbits < width:
-            if pos >= n:
+        if nbits < width:  # nbits < 12 here, so 16 more always suffice
+            if pos + 1 < n:
+                acc = (acc << 16) | (data[pos] << 8) | data[pos + 1]
+                pos += 2
+                nbits += 16
+            elif pos < n:
+                acc = (acc << 8) | data[pos]
+                pos += 1
+                nbits += 8
+                if nbits < width:
+                    return bytes(out)  # stream ended without EOI: tolerate
+            else:
                 return bytes(out)  # stream ended without EOI: tolerate
-            acc = (acc << 8) | data[pos]
-            pos += 1
-            nbits += 8
-        code = (acc >> (nbits - width)) & ((1 << width) - 1)
         nbits -= width
+        code = (acc >> nbits) & mask
+        acc &= (1 << nbits) - 1
         if code == CLEAR:
-            reset()
+            table = _LZW_ROOT.copy()
+            size, width, mask = 258, 9, 511
+            prev = None
             continue
         if code == EOI:
             return bytes(out)
@@ -161,18 +172,21 @@ def _lzw_decode(data: bytes) -> bytes:
             if code >= 256:
                 raise ValueError("corrupt LZW stream (first code >= 256)")
             entry = table[code]
-        elif code < len(table):
+        elif code < size:
             entry = table[code]
             table.append(prev + entry[:1])
-        elif code == len(table):
+            size += 1
+        elif code == size:
             entry = prev + prev[:1]
             table.append(entry)
+            size += 1
         else:
             raise ValueError("corrupt LZW stream (code beyond table)")
         out += entry
         prev = entry
-        if len(table) == (1 << width) - 1 and width < 12:
+        if size == mask and width < 12:
             width += 1
+            mask = (1 << width) - 1
 
 
 def _lzw_encode(data: bytes) -> bytes:

@@ -76,3 +76,31 @@ def partial_events_df(spark):
 
 
 SF_SMALL = "/root/testdata/sf0.001"
+
+
+@pytest.fixture(scope="session")
+def tiff_fixture_meta(spark):
+    """The cached metadata scan of the committed ten-file TIFF fixture
+    (five 2-channel 10×13 records, one codec/layout per file), as the
+    CLI and the benchmark load it (``load_meta_union`` caches)."""
+    from scip_spark.sources.filescan import load_meta_union, tiff_meta
+
+    root = Path(__file__).resolve().parent.parent / "scip_spark" / "fixtures" / "tiff"
+    regex = r"^.*/(?P<rec>[a-z])_(?P<channel>[0-9])\.tiff$"
+    meta = load_meta_union([tiff_meta(spark, str(root), regex, channels=["0", "1"])])
+    yield meta
+    meta.unpersist()
+
+
+@pytest.fixture
+def tiff_fixture_config():
+    """The benchmark's fused otsu+li imaging config, sized for the TIFF
+    fixture's two channels."""
+    return {
+        "illumination_correction": {"key": "group"},
+        "segment": {"backend": "watershed", "parent_channel": 0},
+        "mask": {"methods": ["otsu", "li"], "main_channel": 0},
+        "filter": {"channel": 0},
+        "normalization": {"key": "group"},
+        "feature_extraction": {"nchannels": 2, "families": None},
+    }

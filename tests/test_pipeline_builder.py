@@ -3,6 +3,7 @@
 import os
 
 import numpy as np
+import pandas as pd
 import pytest
 
 from scip_spark.operators.features import feature_columns
@@ -146,6 +147,36 @@ def test_fused_equals_legacy_branch_plan(full_events_df):
     for m in a.regions, b.regions:
         assert m.notna().all()
     assert [list(x) for x in a.regions] == [list(x) for x in b.regions]
+
+
+def test_fused_equals_unfused_stages_on_tiff_loader(tiff_fixture_meta, tiff_fixture_config):
+    """Loader → build over the committed TIFF fixture is frame-identical
+    with stage fusion on (decode through masks in one Python worker) and
+    off (one mapInPandas per operator): the same batch closures run in
+    the same order either way."""
+    import scip_spark.operators as OPS
+    from scip_spark.plans.pipeline import BuildCaches
+    from scip_spark.sources.filescan import attach_pixels
+    from scip_spark.sources.tiffio import read_tiff
+
+    def features():
+        caches = BuildCaches()
+        try:
+            px = attach_pixels(tiff_fixture_meta, ["0", "1"], read_tiff)
+            out = build(px, tiff_fixture_config, caches=caches).toPandas()
+        finally:
+            caches.unpersist(blocking=True)
+        out["regions"] = out["regions"].map(tuple)
+        return out.sort_values(list(out.columns)).reset_index(drop=True)
+
+    fused = features()
+    OPS.FUSE_STAGES = False
+    try:
+        unfused = features()
+    finally:
+        OPS.FUSE_STAGES = True
+    assert len(fused) > 0
+    pd.testing.assert_frame_equal(fused, unfused)
 
 
 def test_duplicate_branch_determinism_via_builder(full_events_df):

@@ -8,7 +8,7 @@ from scip_spark.operators.illumination import correct, mean_images
 from scip_spark.operators.projection import project
 from scip_spark.operators.segmentation import segment_labels, to_events
 from scip_spark.operators.threshold_filter import population_filter
-from scip_spark.schema import EVENT_SCHEMA, decode_tensor, events_to_pandas
+from scip_spark.schema import EVENT_SCHEMA, decode_tensor, ensure_event_columns, events_to_pandas
 
 
 def test_projection(spark):
@@ -282,3 +282,85 @@ def test_map_stage_fusion(spark, full_events_df):
         assert n_map_nodes(barrier) == 2
     finally:
         masked.unpersist()
+
+
+def _n_python_nodes(df, node="MapInPandas"):
+    return df._jdf.queryExecution().analyzed().toString().count(node)
+
+
+def test_fused_build_decodes_in_one_python_worker(spark, tiff_fixture_meta, tiff_fixture_config):
+    """Over the TIFF loader, the relation the fused multi-branch build
+    persists is ONE mapInPandas above the cached metadata scan: decode,
+    typed nulls, illumination divide, segmentation, to_events and every
+    branch's masks share one Python worker per task."""
+    from scip_spark.plans.pipeline import BuildCaches, build
+    from scip_spark.sources.filescan import attach_pixels
+    from scip_spark.sources.tiffio import read_tiff
+
+    caches = BuildCaches()
+    try:
+        build(attach_pixels(tiff_fixture_meta, ["0", "1"], read_tiff), tiff_fixture_config, caches=caches)
+        (persisted,) = caches.frames
+        assert _n_python_nodes(persisted) == 1
+        assert _n_python_nodes(persisted, "FlatMapGroupsInPandas") == 0
+    finally:
+        caches.unpersist(blocking=True)
+
+
+def test_mean_images_one_python_pass(spark, tiff_fixture_meta, monkeypatch):
+    """The per-group mean images run as ONE mapInPandas fused onto the
+    loader (decode + partial sums) and a JVM combine: no applyInPandas
+    (FlatMapGroupsInPandas) and no second Python runner."""
+    from scip_spark.sources.filescan import attach_pixels
+    from scip_spark.sources.tiffio import read_tiff
+
+    px = ensure_event_columns(attach_pixels(tiff_fixture_meta, ["0", "1"], read_tiff))
+    plans = []
+    collect = type(px).collect
+
+    def spy(self):
+        plans.append(self)
+        return collect(self)
+
+    monkeypatch.setattr(type(px), "collect", spy)
+    mu = mean_images(px, "group")
+    monkeypatch.undo()
+    (sums,) = plans
+    assert _n_python_nodes(sums) == 1
+    assert _n_python_nodes(sums, "FlatMapGroupsInPandas") == 0
+
+    # same images as a driver-side numpy mean over the decoded records
+    rows = px.select("pixels", "pixels_shape").collect()
+    mean = np.mean([decode_tensor(r.pixels, r.pixels_shape) for r in rows], axis=0, dtype=np.float64)
+    from scip_spark.operators.illumination import _finish
+
+    (got,) = mu.values()
+    np.testing.assert_array_equal(got, _finish(mean, 3, 1))
+
+
+def test_ensure_event_columns_keeps_fusion(spark, tiff_fixture_meta):
+    """On a map_events output the typed nulls are a fused pandas step:
+    a following map_events stage still shares the loader's mapInPandas,
+    and schema and values equal the Catalyst withColumns path's."""
+    import scip_spark.operators as OPS
+    from scip_spark.operators import map_events
+    from scip_spark.sources.filescan import attach_pixels
+    from scip_spark.sources.tiffio import read_tiff
+
+    px = attach_pixels(tiff_fixture_meta, ["0", "1"], read_tiff)
+    fused = ensure_event_columns(px)
+    assert _n_python_nodes(map_events(fused, lambda pdf: pdf)) == 1
+
+    OPS.FUSE_STAGES = False
+    try:
+        catalyst = ensure_event_columns(px)
+        assert _n_python_nodes(catalyst) == 1
+    finally:
+        OPS.FUSE_STAGES = True
+    assert fused.schema == catalyst.schema
+    a = fused.toPandas().sort_values("rec").reset_index(drop=True)
+    b = catalyst.toPandas().sort_values("rec").reset_index(drop=True)
+    added = [c for c in fused.columns if c not in px.columns]
+    assert added and all(a[c].isna().all() and b[c].isna().all() for c in added)
+    for c in px.columns:
+        assert [np.asarray(v).tolist() for v in a[c]] == [np.asarray(v).tolist() for v in b[c]]
