@@ -309,25 +309,25 @@ def test_fused_build_decodes_in_one_python_worker(spark, tiff_fixture_meta, tiff
 
 def test_mean_images_one_python_pass(spark, tiff_fixture_meta, monkeypatch):
     """The per-group mean images run as ONE mapInPandas fused onto the
-    loader (decode + partial sums) and a JVM combine: no applyInPandas
-    (FlatMapGroupsInPandas) and no second Python runner."""
+    loader (decode + partial sums), combined on the driver: no
+    applyInPandas (FlatMapGroupsInPandas) and no second Python runner."""
     from scip_spark.sources.filescan import attach_pixels
     from scip_spark.sources.tiffio import read_tiff
 
     px = ensure_event_columns(attach_pixels(tiff_fixture_meta, ["0", "1"], read_tiff))
     plans = []
-    collect = type(px).collect
+    to_arrow = type(px).toArrow
 
     def spy(self):
         plans.append(self)
-        return collect(self)
+        return to_arrow(self)
 
-    monkeypatch.setattr(type(px), "collect", spy)
+    monkeypatch.setattr(type(px), "toArrow", spy)
     mu = mean_images(px, "group")
     monkeypatch.undo()
-    (sums,) = plans
-    assert _n_python_nodes(sums) == 1
-    assert _n_python_nodes(sums, "FlatMapGroupsInPandas") == 0
+    (parts,) = plans
+    assert _n_python_nodes(parts) == 1
+    assert _n_python_nodes(parts, "FlatMapGroupsInPandas") == 0
 
     # same images as a driver-side numpy mean over the decoded records
     rows = px.select("pixels", "pixels_shape").collect()
