@@ -740,7 +740,7 @@ def funnel_conversion(spark, sf_dir):
     """,
     doc="cohort retention: users bucketed by first-seen week, activity "
     "counted per (cohort_week, week_offset) — one distinct pass plus a "
-    "user-keyed join of the tiny firsts relation; the classic "
+    "join on user_id of the tiny firsts relation; the classic "
     "engagement matrix",
 )
 def cohort_retention(spark, sf_dir):

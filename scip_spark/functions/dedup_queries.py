@@ -1666,7 +1666,7 @@ def dedup_substring_spans_stream(spark, sf_dir):
     "dedup_substring_spans; the per-doc positional filter is "
     "O(n·|covered|) column algebra with both relations doc-bounded. "
     "Scale shape: same linear window-count shuffle as the spans op "
-    "plus one doc-keyed join of the covered-position sets.",
+    "plus one join on doc_id of the covered-position sets.",
 )
 def dedup_substring_clean(spark, sf_dir):
     docs = tbl(spark, sf_dir, "documents").select("doc_id", "text")

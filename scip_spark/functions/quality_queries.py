@@ -399,7 +399,7 @@ def contamination_normalized(spark, sf_dir):
     "noise, boilerplate splice points). Scale shape: unigram/bigram "
     "counts are map-side-combined aggs; the unigram join touches "
     "only the DISTINCT-bigram relation (vocab-bounded, not corpus "
-    "occurrences), then one bg-keyed join prices each occurrence — "
+    "occurrences), then one join on bg prices each occurrence — "
     "Zipf-hot bigram keys split under AQE since the rate side is one "
     "row per key.",
 )
@@ -1100,7 +1100,7 @@ _SB_SQL = f"""
     "division hash-matches cross-engine where libm log/pow cannot. "
     "Scale shape: model counts are map-side-combined aggs over the "
     "train partition; pricing joins touch only the DISTINCT eval "
-    "trigram relation (vocab-bounded), then one tg-keyed join prices "
+    "trigram relation (vocab-bounded), then one join on tg prices "
     "each occurrence — the bigram_surprisal_scores plan one order up.",
 )
 def trigram_backoff_scores(spark, sf_dir):

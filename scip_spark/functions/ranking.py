@@ -43,16 +43,7 @@ full-width (value, sub-bucket) partitions, but the exclusive-prefix
 stage over the counts relation runs ``n_buckets`` concurrent tasks,
 each sorting ~|distinct (value, sub)| / n_buckets count rows. Ties
 compress that relation (a billion-row tie group is <= n_buckets
-rows), so it only grows with distinct ORDER VALUES. For near-unique
-order keys at extreme scale, pass ``fan > 1``: the offsets stage then
-runs over ``n_buckets * fan`` FINE value-quantile buckets nested under
-the coarse ones (fine totals prefix within each coarse bucket via a
-fan-row window; coarse totals via the theta join) — a three-level
-prefix hierarchy whose per-task offset rows shrink to
-|distinct values| / (n_buckets * fan). count rows are 3 longs each, so
-even 10^10 distinct values at n_buckets=64, fan=16 is ~10^7 rows
-(~240 MB) per offset task; fan=1 (default) keeps the cheapest
-single-level plan for moderate cardinality.
+rows), so it only grows with distinct ORDER VALUES.
 
 Replaces the reference's single-node sorted quantile/rank primitives
 (numpy sort semantics, reference src/scip/features/intensity.py) with a
@@ -78,7 +69,6 @@ def with_global_rank(
     out_col: str = "global_rank",
     n_buckets: int = 64,
     total_col: str | None = None,
-    fan: int = 1,
 ) -> DataFrame:
     """Add ``out_col`` = exact 1-based rank under (order ASC, tiebreak
     ASC) — the distributed equivalent of
@@ -100,93 +90,33 @@ def with_global_rank(
         .withColumn("__gr_vd", _col(order).cast("double"))
         .withColumn("__gr_td", _col(tiebreak).cast("double"))
     )
-    # THREE-LEVEL prefix hierarchy over the order values: nf = n_buckets
-    # * fan FINE value-quantile buckets, nested under n_buckets coarse
-    # buckets (coarse = fine DIV fan — same boundary list, perfectly
-    # nested). The counts-relation prefix below then runs nf concurrent
-    # tasks instead of n_buckets: for a near-unique order key over N
-    # rows each task sorts ~N/nf count rows (N/65536 at the defaults) —
-    # the "multi-level offsets" fix for >1e10 distinct order values.
-    # ``fan`` trades percentile-probe cost (O(nf) boundary extraction,
-    # ~1s per call at nf=1024 on 32 cores, plus two extra tiny stages)
-    # against per-task offset rows (N / nf). The default fan=1 keeps the
-    # single-level plan (cheapest at moderate cardinality — measured
-    # +50% on rfm_segmentation at fan=8/sf0.1, all probe overhead);
-    # raise it when |distinct order values| / n_buckets rows per offset
-    # task would not fit a task's memory (~1e10 distinct at the
-    # defaults). Ranks are EXACT at any fan (asserted by tests that run
-    # fan=1 and fan=8 against the same single-partition oracle).
-    if fan < 1:
-        raise ValueError(f"with_global_rank: fan must be >= 1, got {fan}")
     if n_buckets < 2:
         raise ValueError(
             f"with_global_rank: n_buckets must be >= 2, got {n_buckets} "
             "(the coarse probe needs at least one boundary)"
         )
-    nf = n_buckets * fan
-    probs = [i / nf for i in range(1, nf)]
+    probs = [i / n_buckets for i in range(1, n_buckets)]
     # accuracy only shapes bucket BALANCE, never rank correctness: any
-    # boundary placement yields exact ranks. 2*nf keeps adjacent GK
-    # boundaries mostly distinct; collisions just merge fine buckets
+    # boundary placement yields exact ranks. 2*n_buckets keeps adjacent
+    # GK boundaries mostly distinct; collisions just merge buckets
     bounds = d.agg(
-        F.percentile_approx("__gr_vd", probs, max(1000, 2 * nf)).alias("__gr_vbs"),
-        F.percentile_approx(
-            "__gr_td", [i / n_buckets for i in range(1, n_buckets)], 1000
-        ).alias("__gr_tbs"),
+        F.percentile_approx("__gr_vd", probs, max(1000, 2 * n_buckets)).alias(
+            "__gr_vbs"
+        ),
+        F.percentile_approx("__gr_td", probs, 1000).alias("__gr_tbs"),
     )
-    # two-phase fine-bucket lookup: a linear scan of all nf-1 sorted
-    # boundaries would cost O(nf) per row; probing the every-fan-th
-    # subset first and then only the fan-sized slice it selects is
-    # O(n_buckets + fan) with the identical result (boundaries are
-    # sorted, so cuts at indices <= c*fan are <= v and cuts beyond
-    # (c+1)*fan are > v)
-    if fan == 1:
-        d = (
-            d.crossJoin(F.broadcast(bounds))
-            .withColumn(
-                "__gr_vf",
-                F.coalesce(
-                    F.expr("size(filter(__gr_vbs, x -> x <= __gr_vd))"), F.lit(0)
-                ),
-            )
-            .withColumn(
-                "__gr_sub",
-                F.coalesce(
-                    F.expr("size(filter(__gr_tbs, x -> x <= __gr_td))"), F.lit(0)
-                ),
-            )
-            .drop("__gr_vbs", "__gr_tbs", "__gr_vd", "__gr_td")
-        )
-    else:
-        d = (
+    d = (
         d.crossJoin(F.broadcast(bounds))
         .withColumn(
-            "__gr_vc",
-            F.coalesce(
-                F.expr(
-                    f"size(filter(transform(sequence(1, {n_buckets - 1}), "
-                    f"i -> element_at(__gr_vbs, i * {fan})), x -> x <= __gr_vd))"
-                ),
-                F.lit(0),
-            ),
-        )
-        .withColumn(
             "__gr_vf",
-            F.col("__gr_vc") * fan
-            + F.coalesce(
-                F.expr(
-                    f"size(filter(slice(__gr_vbs, __gr_vc * {fan} + 1, {fan}), "
-                    "x -> x <= __gr_vd))"
-                ),
-                F.lit(0),
-            ),
+            F.coalesce(F.expr("size(filter(__gr_vbs, x -> x <= __gr_vd))"), F.lit(0)),
         )
         .withColumn(
             "__gr_sub",
             F.coalesce(F.expr("size(filter(__gr_tbs, x -> x <= __gr_td))"), F.lit(0)),
         )
-        .drop("__gr_vbs", "__gr_tbs", "__gr_vd", "__gr_td", "__gr_vc")
-        )
+        .drop("__gr_vbs", "__gr_tbs", "__gr_vd", "__gr_td")
+    )
     # local rank within (value, tie-sub-bucket): bounded partitions for
     # any distribution (ties split by tiebreak quantiles)
     w_local = W.partitionBy("__gr_v", "__gr_sub").orderBy("__gr_t")
@@ -204,56 +134,19 @@ def with_global_rank(
     counts = counts.withColumn(
         "__gr_locoff", F.coalesce(F.sum("__gr_c").over(w_in_vf), F.lit(0))
     )
-    # fine-bucket totals (<= nf rows): exclusive prefix WITHIN each
-    # coarse bucket via a window over <= fan rows per task, then the
-    # <= n_buckets coarse totals via a broadcast theta self-join
-    # (<= n_buckets^2 pairs) — NO window at all in that last step, so
-    # nothing in this construction ever logs
+    # value-bucket totals (<= n_buckets rows): exclusive prefix via a
+    # broadcast theta self-join (<= n_buckets^2 pairs) — NO window at
+    # all in that last step, so nothing in this construction ever logs
     # "WindowExec: No Partition Defined"
     vf_tot = counts.groupBy("__gr_vf").agg(F.sum("__gr_c").alias("__gr_vfc"))
-    if fan == 1:
-        # single level: exclusive prefix over the <= n_buckets fine
-        # totals directly as the broadcast theta self-join
-        prior = vf_tot.select(
-            F.col("__gr_vf").alias("__gr_pvf"), F.col("__gr_vfc").alias("__gr_pc")
-        )
-        vf_off = (
-            vf_tot.join(
-                F.broadcast(prior), F.col("__gr_pvf") < F.col("__gr_vf"), "left"
-            )
-            .groupBy("__gr_vf")
-            .agg(F.coalesce(F.sum("__gr_pc"), F.lit(0)).alias("__gr_vfbase"))
-        )
-        vb_tot = vf_tot  # for total_col below
-        vb_tot = vb_tot.withColumnRenamed("__gr_vfc", "__gr_vbc")
-    else:
-        vf_tot = vf_tot.withColumn("__gr_vb", (F.col("__gr_vf") / fan).cast("int"))
-        w_in_vb = (
-            W.partitionBy("__gr_vb")
-            .orderBy("__gr_vf")
-            .rowsBetween(W.unboundedPreceding, -1)
-        )
-        vf_tot = vf_tot.withColumn(
-            "__gr_vfoff", F.coalesce(F.sum("__gr_vfc").over(w_in_vb), F.lit(0))
-        )
-        vb_tot = vf_tot.groupBy("__gr_vb").agg(F.sum("__gr_vfc").alias("__gr_vbc"))
-        prior = vb_tot.select(
-            F.col("__gr_vb").alias("__gr_pvb"), F.col("__gr_vbc").alias("__gr_pc")
-        )
-        vb_off = (
-            vb_tot.join(
-                F.broadcast(prior), F.col("__gr_pvb") < F.col("__gr_vb"), "left"
-            )
-            .groupBy("__gr_vb")
-            .agg(F.coalesce(F.sum("__gr_pc"), F.lit(0)).alias("__gr_vboff"))
-        )
-        vf_off = (
-            vf_tot.join(F.broadcast(vb_off), "__gr_vb")
-            .select(
-                "__gr_vf",
-                (F.col("__gr_vboff") + F.col("__gr_vfoff")).alias("__gr_vfbase"),
-            )
-        )
+    prior = vf_tot.select(
+        F.col("__gr_vf").alias("__gr_pvf"), F.col("__gr_vfc").alias("__gr_pc")
+    )
+    vf_off = (
+        vf_tot.join(F.broadcast(prior), F.col("__gr_pvf") < F.col("__gr_vf"), "left")
+        .groupBy("__gr_vf")
+        .agg(F.coalesce(F.sum("__gr_pc"), F.lit(0)).alias("__gr_vfbase"))
+    )
     offsets = (
         counts.join(F.broadcast(vf_off), "__gr_vf")
         .select(
@@ -268,7 +161,7 @@ def with_global_rank(
         out_col, (F.col("__gr_off") + F.col("__gr_lrn")).cast("long")
     )
     if total_col is not None:
-        total = vb_tot.agg(F.sum("__gr_vbc").cast("long").alias(total_col))
+        total = vf_tot.agg(F.sum("__gr_vfc").cast("long").alias(total_col))
         ranked = ranked.crossJoin(F.broadcast(total))
     return ranked.drop("__gr_v", "__gr_t", "__gr_vf", "__gr_sub", "__gr_lrn", "__gr_off")
 

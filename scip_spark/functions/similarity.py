@@ -509,7 +509,7 @@ def _shortlist_and_rerank(
 ):
     """Shared PQ-family tail: take the top ``rerank`` candidates per
     query by ``approx_sim`` (deterministic c_id tie-break), fetch raw
-    vectors for the shortlist ONLY (one keyed join — the scan stage
+    vectors for the shortlist ONLY (one join on c_id — the scan stage
     never carries vectors), re-rank by exact cosine, keep top ``k``."""
     w = W.partitionBy("q_id").orderBy(F.desc("approx_sim"), F.asc("c_id"))
     shortlist = (

@@ -255,9 +255,9 @@ MASK_FRONTS = {
 
 def make_mask_batch(method: str = "otsu", **kwargs) -> Callable[[pd.DataFrame], pd.DataFrame]:
     """The per-Arrow-batch kernel behind :func:`get_mask`, exposed as a
-    factory so the fused multi-branch pipeline (plans/pipeline.py) can
-    run several mask methods inside ONE mapInPandas pass — same closure
-    either way, so fused and branch plans are bit-identical."""
+    factory so the pipeline builder (plans/pipeline.py) can run several
+    mask methods inside ONE mapInPandas pass — same closure either way,
+    so ``build`` and the composed operators are bit-identical."""
     fn = MASK_METHODS[method]
     front = MASK_FRONTS.get(method)
 

@@ -244,7 +244,9 @@ def mask_subtract(df: DataFrame, target: int, left: int, right: int) -> DataFram
 def to_events(df: DataFrame, parent_channel: int = 0, group_keys: list[str] | None = None) -> DataFrame:
     """1→N flatMap: one record per labeled component of the parent
     channel, pixels+mask cropped to the component bbox, ``id`` = label,
-    ``group`` = join of group_keys (reference segmentation/__init__.py:85-118)."""
+    ``group`` = join of group_keys (reference segmentation/__init__.py:85-118),
+    NULL when a key part is NULL or no key column exists — the NULL
+    group illumination correction used for the same record."""
     group_keys = group_keys or ["group"]
 
     def batch(pdf: pd.DataFrame) -> pd.DataFrame:
@@ -259,6 +261,12 @@ def to_events(df: DataFrame, parent_channel: int = 0, group_keys: list[str] | No
             a, m = pixels[i], masks[i]
             if a is None or m is None:
                 continue
+            parts = [col_vals[k][i] for k in gkeys]
+            group = (
+                None
+                if not parts or any(pd.isna(v) for v in parts)
+                else "_".join(str(v) for v in parts)
+            )
             lab, n = K.label(m[parent_channel], 2)
             for l0 in range(1, n + 1):
                 comp = lab == l0
@@ -279,7 +287,7 @@ def to_events(df: DataFrame, parent_channel: int = 0, group_keys: list[str] | No
                 row["bbox"] = [int(minr), int(minc), int(maxr), int(maxc)]
                 row["regions"] = [int(crop_m[c].any()) for c in range(crop_px.shape[0])]  # reference segmentation/__init__.py:100-102
                 row["id"] = int(l0)
-                row["group"] = "_".join(str(col_vals[k][i]) for k in gkeys)
+                row["group"] = group
                 out_rows.append(row)
         if not out_rows:
             return pd.DataFrame(columns=list(pdf.columns))

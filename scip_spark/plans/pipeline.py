@@ -7,9 +7,10 @@ normalization → features → export, each gated on its config key
 (src/scip/main.py:63-282; YAML spec docs/source/usage.rst:12-87).
 
 Here the same config dict drives construction of a Catalyst plan.
-Divergence by design (SURVEY §7.0): multi-mask fan-out branches share
-one cached upstream and rejoin on the record key — never the
-reference's fragile positional concat (main.py:268).
+Divergence by design (SURVEY §7.0): the mask fan-out is not a set of
+branch plans glued back together — the reference's fragile positional
+concat (main.py:268) — but one pass that computes every branch side by
+side on each record (SURVEY §2.3 J6's own 'better plan').
 """
 
 from __future__ import annotations
@@ -19,14 +20,24 @@ from typing import Any
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
+from pyspark.storagelevel import StorageLevel
 
-from scip_spark.operators import masking as M
-from scip_spark.operators import features as FE
+from scip_spark.operators import map_events
+from scip_spark.operators.features import (
+    DEFAULT_FAMILIES,
+    feature_columns,
+    feature_schema,
+    make_features_batch,
+)
 from scip_spark.operators.illumination import correct
-from scip_spark.operators.normalization import quantile_normalization
+from scip_spark.operators.masking import make_apply_mask_batch, make_mask_batch
+from scip_spark.operators.normalization import group_extents, make_rescale_batch
 from scip_spark.operators.projection import project
 from scip_spark.operators.segmentation import segment_labels, to_events
-from scip_spark.operators.threshold_filter import population_filter
+from scip_spark.operators.threshold_filter import make_filter_sum_batch
+from scip_spark.queries import PHI_95
+from scip_spark.schema import ensure_event_columns
 
 STAGES = [
     "project",
@@ -41,12 +52,12 @@ STAGES = [
 
 
 class BuildCaches:
-    """Ownership handle for the DataFrames ``build`` persists.
+    """Ownership handle for the DataFrame ``build`` persists.
 
-    The fan-out cache and the population filter's summed relation must
-    outlive ``build`` (the caller's terminal action consumes them), so
-    they cannot be unpersisted inside the builder; without a handle
-    each pipeline build leaks one cached relation per mask branch for
+    The relation the population filter's stats action and the group
+    extents read must outlive ``build`` (the caller's terminal action
+    consumes it too), so it cannot be unpersisted inside the builder;
+    without a handle each pipeline build leaks one cached relation for
     the session lifetime. Pass an instance to ``build`` and call
     :meth:`unpersist` once the terminal action (write/collect) has run.
     """
@@ -66,9 +77,10 @@ class BuildCaches:
                 pass
 
 
-#: branch-dependent event columns the fused pass stores once per mask
-#: method (suffixed ``<col>__<method>``); everything else — notably the
-#: pixel tensor, 25 KB/event — is stored ONCE instead of once per branch.
+#: branch-dependent event columns the single pass stores once per mask
+#: method (suffixed ``<col>__<method>`` when there are several);
+#: everything else — notably the pixel tensor, 25 KB/event — is stored
+#: ONCE instead of once per branch.
 _BRANCH_COLS = [
     "mask",
     "mask_shape",
@@ -80,54 +92,46 @@ _BRANCH_COLS = [
 ]
 
 
-def _build_fused(
+def _build_branches(
     df: DataFrame,
     cfg: dict[str, Any],
     caches: BuildCaches | None,
     methods: list[str],
     mask_cfg: dict[str, Any],
 ) -> DataFrame:
-    """Single-pass multi-branch pipeline (SURVEY §2.3 J6's own 'better
-    plan'): ALL mask methods, mask application and the filter/extent
-    scalars are computed in ONE mapInPandas over the event stream, and
-    all branches' features are emitted side by side from a second single
-    pass — eliminating, versus the branch-per-method plan, the upstream
-    fan-out cache, one persisted tensor relation and one stats action
-    per extra branch, and the J1-replacement keyed join of wide feature
-    frames entirely. Reference contrast: SCIP pays the dual branch
-    graphs plus a positional concat (src/scip/masking/__init__.py:33-72,
-    main.py:268).
+    """Single-pass branch pipeline: every mask method, mask application
+    and the filter/extent scalars are computed in ONE mapInPandas over
+    the event stream (stage A), and every branch's features are emitted
+    side by side from a second one (stage B). No methods means one
+    branch over the events' own (segmentation) masks. Reference
+    contrast: SCIP pays one task graph per branch plus a positional
+    concat (src/scip/masking/__init__.py:33-72, main.py:268).
 
-    Bit-identity with the branch plan is by construction: every stage
-    runs the SAME batch closures (make_mask_batch/make_apply_mask_batch/
-    make_filter_sum_batch/make_rescale_batch/make_features_batch), the
-    population statistic aggregates the same filter_sum values over the
-    same partitioning, and group extents fold the same per-record
-    extents (goldens at 3 SFs unchanged; tests/test_pipeline_builder.py
-    pins fused == legacy column-for-column)."""
-    from pyspark.sql import types as T
-    from pyspark.storagelevel import StorageLevel
+    Stage A is persisted only when the filter's stats action or the
+    extents collect reads it; otherwise stages A and B fuse into one
+    Python worker per task.
 
-    from scip_spark.operators import map_events
-    from scip_spark.operators.features import (
-        feature_columns,
-        feature_schema,
-        make_features_batch,
-    )
-    from scip_spark.operators.masking import make_apply_mask_batch, make_mask_batch
-    from scip_spark.operators.normalization import group_extents, make_rescale_batch
-    from scip_spark.operators.threshold_filter import make_filter_sum_batch
-    from scip_spark.queries import PHI_95
-
+    Every stage runs the batch closures behind the public operators
+    (make_mask_batch/make_apply_mask_batch/make_filter_sum_batch/
+    make_rescale_batch/make_features_batch), the population statistic
+    aggregates the same filter_sum values, and the group extents fold
+    the same per-record extents, so the output equals the operators
+    composed per branch (tests/test_pipeline_builder.py pins it)."""
     want_filter = "filter" in cfg
     want_norm = "normalization" in cfg
     fe = cfg["feature_extraction"]
     nchannels = fe["nchannels"]
-    families = fe.get("families")
+    families = fe.get("families") or DEFAULT_FAMILIES
 
-    mask_batches = [
+    # (branch name, mask batch); None = keep the events' own masks
+    branches = [
         (m, make_mask_batch(m, **mask_cfg.get("kwargs", {}))) for m in methods
-    ]
+    ] or [("raw", None)]
+    multi = len(branches) > 1
+
+    def stored(c: str, m: str) -> str:
+        return f"{c}__{m}" if multi else c
+
     apply_batch = make_apply_mask_batch()
     fs_batch = (
         make_filter_sum_batch(
@@ -137,45 +141,44 @@ def _build_fused(
         else None
     )
     ext_cols = ["ch_min", "ch_max"] if want_norm else []
+    view_cols = _BRANCH_COLS + ext_cols
 
     # ---- stage A: every branch's masks + scalars, one pass ----------
     def stage_a(pdf):
         out = pdf.copy()
-        last = None
-        for m, mb in mask_batches:
-            b = mb(pdf)
-            b = apply_batch(b)
+        for m, mb in branches:
+            b = pdf if mb is None else apply_batch(mb(pdf))
             if fs_batch is not None:
                 b = fs_batch(b)
-            for c in _BRANCH_COLS + ext_cols:
-                out[f"{c}__{m}"] = b[c].values
-            last = b
+            for c in view_cols:
+                out[stored(c, m)] = b[c].values
         if want_filter:
             # filter_sum is a function of the (shared) pixels only —
             # identical across branches, stored once
-            out["filter_sum"] = last["filter_sum"].values
+            out["filter_sum"] = b["filter_sum"].values
         return out
 
-    by_name = {f.name: f for f in df.schema.fields}
+    types = {f.name: f.dataType for f in df.schema.fields}
+    types.update({c: T.ArrayType(T.DoubleType()) for c in ext_cols})
     fields = list(df.schema.fields)
-    for m in methods:
-        for c in _BRANCH_COLS:
-            fields.append(T.StructField(f"{c}__{m}", by_name[c].dataType, True))
-        for c in ext_cols:
-            fields.append(
-                T.StructField(f"{c}__{m}", T.ArrayType(T.DoubleType()), True)
-            )
-    fused = map_events(df, stage_a, T.StructType(fields))
+    for m, _ in branches:
+        fields += [
+            T.StructField(stored(c, m), types[c], True)
+            for c in view_cols
+            if stored(c, m) not in df.columns
+        ]
+    events = map_events(df, stage_a, T.StructType(fields))
 
-    # one spillable materialization serves the stats action, the extent
-    # aggregations and the feature pass (vs. cache + N persists before)
-    fused = fused.persist(StorageLevel.MEMORY_AND_DISK)
-    if caches is not None:
-        caches.add(fused)
+    if want_filter or want_norm:
+        # one spillable materialization serves the stats action, the
+        # extent aggregation and the feature pass
+        events = events.persist(StorageLevel.MEMORY_AND_DISK)
+        if caches is not None:
+            caches.add(events)
 
     # ---- population filter: ONE stats action (filter_sum is shared) --
     if want_filter:
-        row = fused.agg(
+        row = events.agg(
             F.avg("filter_sum").alias("mu"),
             F.stddev_pop("filter_sum").alias("sigma"),
         ).collect()[0]
@@ -183,82 +186,72 @@ def _build_fused(
         if mu is not None:
             keep = F.col("filter_sum") > F.lit(mu - PHI_95 * (sigma or 0.0))
             soft = ["pixels", "pixels_shape"] + [
-                f"{c}__{m}"
-                for m in methods
+                stored(c, m)
+                for m, _ in branches
                 for c in ("mask", "mask_shape", *ext_cols)
             ]
-            fused = fused.withColumns({c: F.when(keep, F.col(c)) for c in soft})
+            events = events.withColumns({c: F.when(keep, F.col(c)) for c in soft})
 
     # ---- every branch's group extents: ONE pure-JVM aggregate over the
     # branches' extent columns stacked by method, ONE collect ----------
     if want_norm:
         key = cfg["normalization"].get("key", "group")
-        luts: dict[str, dict] = {m: {} for m in methods}
-        stacked = fused.select(
+        luts: dict[str, dict] = {m: {} for m, _ in branches}
+        stacked = events.select(
             key,
             F.inline(
                 F.array(
                     *[
                         F.struct(
                             F.lit(m).alias("method"),
-                            F.col(f"ch_min__{m}").alias("ch_min"),
-                            F.col(f"ch_max__{m}").alias("ch_max"),
+                            F.col(stored("ch_min", m)).alias("ch_min"),
+                            F.col(stored("ch_max", m)).alias("ch_max"),
                         )
-                        for m in methods
+                        for m, _ in branches
                     ]
                 )
             ),
         )
         for r in group_extents(stacked, [key, "method"]).collect():
             luts[r["method"]][(r[key], r["channel"])] = (r["gmin"], r["gmax"])
-        rescales = {
-            m: make_rescale_batch(luts[m], key=key) for m in methods
-        }
+        rescales = {m: make_rescale_batch(luts[m], key=key) for m in luts}
 
     # ---- stage B: normalize + extract EVERY branch's features, one pass
     feats_batch = make_features_batch(nchannels, families)
-    fam = families or None
-    from scip_spark.operators.features import DEFAULT_FAMILIES
-
-    flat_cols = feature_columns(nchannels, fam or DEFAULT_FAMILIES)
+    flat_cols = feature_columns(nchannels, families)
     meta_cols = ["path", "group", "id", "object_number", "regions"]
-    view_cols = _BRANCH_COLS + ext_cols
+
+    def out_name(c: str, m: str) -> str:
+        return f"feat_{m}_{c[5:]}" if multi else c
 
     def stage_b(pdf):
         pieces = []
-        for i, m in enumerate(methods):
-            view = pdf.copy()
-            for c in view_cols:
-                view[c] = pdf[f"{c}__{m}"]
+        for i, (m, _) in enumerate(branches):
+            view = pdf.assign(**{c: pdf[stored(c, m)] for c in view_cols})
             if want_norm:
                 view = rescales[m](view)
             fdf = feats_batch(view).reset_index(drop=True)
             if i == 0:
                 pieces.append(fdf[meta_cols])
-            renamed = fdf[flat_cols].rename(
-                columns={c: f"feat_{m}_{c[5:]}" for c in flat_cols}
+            pieces.append(
+                fdf[flat_cols].rename(columns={c: out_name(c, m) for c in flat_cols})
             )
-            pieces.append(renamed)
         return pd.concat(pieces, axis=1)
 
-    meta_fields = [
-        f for f in feature_schema(nchannels, fam or DEFAULT_FAMILIES).fields
-        if f.name in meta_cols
+    out_fields = [
+        f for f in feature_schema(nchannels, families).fields if f.name in meta_cols
     ]
-    out_fields = list(meta_fields)
-    for m in methods:
-        out_fields += [
-            T.StructField(f"feat_{m}_{c[5:]}", T.DoubleType()) for c in flat_cols
-        ]
-    return map_events(fused, stage_b, T.StructType(out_fields))
+    for m, _ in branches:
+        out_fields += [T.StructField(out_name(c, m), T.DoubleType()) for c in flat_cols]
+    return map_events(events, stage_b, T.StructType(out_fields))
 
 
 def build(
     df: DataFrame, config: dict[str, Any], caches: BuildCaches | None = None
-) -> DataFrame | dict[str, DataFrame]:
-    """Compose the stage operators per config. Returns one feature
-    DataFrame, or a dict of branch frames when multiple mask methods
-    are configured without a join key.
+) -> DataFrame:
+    """Compose the stage operators per config into one feature
+    DataFrame: one row per event, ``feat_<family>_…`` columns for zero
+    or one mask method, ``feat_<method>_<family>_…`` for several.
 
     Config keys mirror the reference's YAML sections::
 
@@ -270,10 +263,12 @@ def build(
          "filter": {"channel": 0},
          "normalization": {"key": "group"},
          "feature_extraction": {"nchannels": 3, "families": [...]}}
+
+    ``feature_extraction`` is required: the plan ends in features.
     """
     cfg = {k: v for k, v in config.items() if v is not None}
-
-    from scip_spark.schema import ensure_event_columns
+    if "feature_extraction" not in cfg:
+        raise ValueError("build: config has no 'feature_extraction' section")
 
     df = ensure_event_columns(df)
 
@@ -290,64 +285,8 @@ def build(
         seed = cfg["sample"].get("seed", 42)
         df = df.orderBy(F.rand(seed)).limit(n)
 
-    mask_cfg = cfg.get("mask", {"methods": []})
-    # duplicate method names collapse (the legacy branches dict did this
-    # implicitly; the fused schema would otherwise carry duplicate
-    # suffixed columns and fail with AMBIGUOUS_REFERENCE)
+    mask_cfg = cfg.get("mask", {})
+    # duplicate method names collapse (the suffixed branch columns
+    # would otherwise be duplicated and fail with AMBIGUOUS_REFERENCE)
     methods = list(dict.fromkeys(mask_cfg.get("methods", [])))
-    if (
-        len(methods) > 1
-        and "feature_extraction" in cfg
-        and mask_cfg.get("fuse", True)
-    ):
-        # default multi-branch plan: single-pass fusion (no fan-out
-        # cache, no per-branch persist, no feature join). Set
-        # mask.fuse=False for the legacy branch-and-join plan.
-        return _build_fused(df, cfg, caches, methods, mask_cfg)
-    if not methods:
-        branches = {"raw": df}
-    else:
-        df = df.cache()  # J6 fan-out: one upstream, N mask branches
-        if caches is not None:
-            caches.add(df)
-        branches = {
-            m: M.apply_mask(M.get_mask(df, m, **mask_cfg.get("kwargs", {})))
-            for m in methods
-        }
-
-    outs: dict[str, DataFrame] = {}
-    for name, branch in branches.items():
-        b = branch
-        if "filter" in cfg:
-            fkw = dict(cfg["filter"])
-            # when normalization follows, precompute per-record extents
-            # in the filter's (already-decoded) pass: group_extents then
-            # needs no second tensor decode over the persisted relation
-            fkw.setdefault("with_extents", "normalization" in cfg)
-            b = population_filter(b, caches=caches, **fkw)
-        if "normalization" in cfg:
-            b = quantile_normalization(b, **cfg["normalization"])
-        if "feature_extraction" in cfg:
-            fe = cfg["feature_extraction"]
-            b = FE.extract_features(b, fe["nchannels"], fe.get("families"))
-            # P9: branch-name prefixing of feature columns
-            if len(branches) > 1:
-                b = b.select(
-                    *[
-                        F.col(c).alias(f"feat_{name}_{c[5:]}") if c.startswith("feat_") else F.col(c)
-                        for c in b.columns
-                    ]
-                )
-        outs[name] = b
-
-    if len(outs) == 1:
-        return next(iter(outs.values()))
-
-    # J1 replacement: keyed join of branch feature frames
-    keys = ["path", "group", "id", "object_number"]
-    it = iter(outs.items())
-    _, joined = next(it)
-    for name, b in it:
-        drop = [c for c in b.columns if c in joined.columns and c not in keys]
-        joined = joined.join(b.drop(*drop), on=keys, how="inner")
-    return joined
+    return _build_branches(df, cfg, caches, methods, mask_cfg)

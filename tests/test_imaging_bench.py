@@ -53,9 +53,9 @@ def test_glcm_narrow_crop_no_crash():
 
 
 def test_imaging_pipeline_small_e2e(spark):
-    """The headline config end-to-end on 24 images: two branches joined
-    on the record key, all five families non-null for kept objects, and
-    a deterministic group rollup."""
+    """The headline config end-to-end on 24 images: two mask branches
+    side by side, all five families non-null for kept objects, and a
+    deterministic group rollup."""
     from pyspark.sql import functions as F
 
     from scip_spark.plans.pipeline import build

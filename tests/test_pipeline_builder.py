@@ -31,10 +31,10 @@ def test_single_branch_pipeline(full_events_df):
     assert not out[cols].isna().any().any()
 
 
-def test_multi_branch_keyed_join(full_events_df):
-    """Multi-mask fan-out joins branch features on the record key —
-    the J1 positional concat replacement. Branch columns get the
-    method-name prefix (P9)."""
+def test_multi_branch_prefixed_columns(full_events_df):
+    """Several mask methods emit every branch's features side by side,
+    one row per record — no positional concat (J1). Branch columns get
+    the method-name prefix (P9)."""
     out = build(
         full_events_df,
         {
@@ -47,12 +47,17 @@ def test_multi_branch_keyed_join(full_events_df):
     assert any(c.startswith("feat_otsu_") for c in out.columns)
 
 
+def test_build_without_features_raises(full_events_df):
+    with pytest.raises(ValueError, match="feature_extraction"):
+        build(full_events_df, {"mask": {"methods": ["circle"]}, "filter": {"channel": 0}})
+
+
 def test_build_caches_handle_releases_persisted_relations(spark, full_events_df):
-    """build() persists the mask fan-out upstream and (per branch) the
-    population filter's summed relation; those must outlive build for
-    the caller's action, so a BuildCaches handle takes ownership and
-    releases every block afterwards — without it each pipeline build
-    leaks cached relations for the session lifetime (ADVICE r6)."""
+    """build() persists the relation the population filter's stats
+    action reads; it must outlive build for the caller's action, so a
+    BuildCaches handle takes ownership and releases every block
+    afterwards — without it each pipeline build leaks a cached relation
+    for the session lifetime (ADVICE r6)."""
     from scip_spark.plans.pipeline import BuildCaches
 
     spark.catalog.clearCache()
@@ -74,9 +79,8 @@ def test_build_caches_handle_releases_persisted_relations(spark, full_events_df)
         },
         caches=caches,
     )
-    # fused multi-branch plan: ONE persisted relation serves the stats
-    # action, the extent aggs and the feature pass (r13 verdict #2 —
-    # versus fan-out cache + one summed relation per branch before)
+    # ONE persisted relation serves the stats action, the extent aggs
+    # and the feature pass, whatever the number of mask methods
     assert len(caches.frames) == 1
     assert len(out.toPandas()) == 10  # terminal action consumes the caches
 
@@ -85,27 +89,11 @@ def test_build_caches_handle_releases_persisted_relations(spark, full_events_df)
     assert n_cached_blocks() <= baseline
     assert caches.frames == []
 
-    # legacy branch-and-join plan (mask.fuse=False): fan-out cache +
-    # one summed relation per mask branch
-    caches = BuildCaches()
-    out = build(
-        full_events_df,
-        {
-            "mask": {"methods": ["circle", "otsu"], "fuse": False},
-            "filter": {"channel": 0},
-            "feature_extraction": {"nchannels": 3, "families": ["intensity"]},
-        },
-        caches=caches,
-    )
-    assert len(caches.frames) == 3
-    assert len(out.toPandas()) == 10
-    caches.unpersist(blocking=True)
-
 
 def test_duplicate_mask_methods_collapse(full_events_df):
-    """r14 review: duplicate method names must collapse (the legacy
-    branches dict did this implicitly; the fused schema would otherwise
-    carry duplicate suffixed columns and fail AMBIGUOUS_REFERENCE)."""
+    """r14 review: duplicate method names must collapse (the suffixed
+    branch columns would otherwise be duplicated and fail
+    AMBIGUOUS_REFERENCE)."""
     out = build(
         full_events_df,
         {
@@ -120,40 +108,83 @@ def test_duplicate_mask_methods_collapse(full_events_df):
     assert len(set(out.columns)) == len(out.columns)
 
 
-def test_fused_equals_legacy_branch_plan(full_events_df):
-    """The fused single-pass multi-branch plan (r13 verdict #2) is
-    bit-identical to the legacy branch-and-join plan on the full config
-    (filter + normalization + all five families): same batch closures,
-    same population statistic, same group extents."""
-    import numpy as np
+@pytest.fixture(scope="module")
+def varied_events_df(spark):
+    """Ten records with distinct seeded pixels in two groups; record 0
+    is dim enough for the population filter to soft-delete it."""
+    from scip_spark.schema import EVENT_SCHEMA, events_to_pandas
 
+    rng = np.random.default_rng(3)
+    events = []
+    for i in range(10):
+        px = rng.random((3, 10, 10)).astype(np.float32) * (1.0 if i == 0 else 100.0 + 10 * i)
+        events.append(
+            {
+                "path": f"/synthetic/img_{i}.tiff",
+                "group": "one" if i < 5 else "two",
+                "object_number": i,
+                "id": 0,
+                "pixels": px,
+                "mask": px > px.mean(),
+                "regions": [1, 1, 1],
+            }
+        )
+    return spark.createDataFrame(events_to_pandas(events), schema=EVENT_SCHEMA)
+
+
+@pytest.mark.parametrize(
+    "methods", [[], ["circle"], ["circle", "otsu"]], ids=["none", "circle", "circle-otsu"]
+)
+def test_build_equals_composed_operators(varied_events_df, methods):
+    """build's single-pass plan equals the public operators composed by
+    hand per mask method (get_mask → apply_mask → population_filter →
+    quantile_normalization → extract_features), with several branches
+    concatenated on the record key: same batch closures, same
+    population statistic, same group extents."""
+    from scip_spark.operators.features import extract_features
+    from scip_spark.operators.masking import apply_mask, get_mask
+    from scip_spark.operators.normalization import quantile_normalization
+    from scip_spark.operators.threshold_filter import population_filter
+
+    keys = ["path", "group", "id", "object_number"]
     cfg = {
-        "mask": {"methods": ["circle", "otsu"]},
+        "mask": {"methods": methods},
         "filter": {"channel": 0},
         "normalization": {"key": "group"},
         "feature_extraction": {"nchannels": 3, "families": None},
     }
-    legacy_cfg = dict(cfg)
-    legacy_cfg["mask"] = dict(cfg["mask"], fuse=False)
-    a = build(full_events_df, cfg).toPandas()
-    b = build(full_events_df, legacy_cfg).toPandas()
-    a = a.sort_values("object_number").reset_index(drop=True)
-    b = b.sort_values("object_number").reset_index(drop=True)
-    assert sorted(a.columns) == sorted(b.columns)
-    feat = [c for c in a.columns if c.startswith("feat_")]
-    np.testing.assert_array_equal(
-        a[feat].to_numpy(float), b[feat].to_numpy(float)
-    )
-    for m in a.regions, b.regions:
-        assert m.notna().all()
-    assert [list(x) for x in a.regions] == [list(x) for x in b.regions]
+    got = build(varied_events_df, cfg).toPandas()
+
+    want = None
+    for m in methods or [None]:
+        b = varied_events_df if m is None else apply_mask(get_mask(varied_events_df, m))
+        b = population_filter(b, channel=0, persist=False, with_extents=True)
+        b = quantile_normalization(b, key="group")
+        f = extract_features(b, 3).toPandas()
+        if len(methods) > 1:
+            f = f.rename(columns={c: f"feat_{m}_{c[5:]}" for c in f.columns if c.startswith("feat_")})
+        want = f if want is None else want.merge(f.drop(columns=["regions"]), on=keys)
+
+    def norm(df):
+        df = df.assign(regions=df["regions"].map(tuple))
+        return df.sort_values(keys).reset_index(drop=True)
+
+    got, want = norm(got), norm(want)
+    assert len(got) == 10
+    # the filter soft-deleted record 0 and kept the others
+    feat = [c for c in got.columns if c.startswith("feat_")]
+    assert got.loc[got.object_number == 0, feat].isna().all().all()
+    assert got.loc[got.object_number != 0, feat].notna().any(axis=1).all()
+    pd.testing.assert_frame_equal(got, want)
 
 
 def test_fused_equals_unfused_stages_on_tiff_loader(tiff_fixture_meta, tiff_fixture_config):
     """Loader → build over the committed TIFF fixture is frame-identical
     with stage fusion on (decode through masks in one Python worker) and
     off (one mapInPandas per operator): the same batch closures run in
-    the same order either way."""
+    the same order either way. The fixture has no group column, so
+    every event keeps the NULL group illumination correction used (not
+    the string 'None')."""
     import scip_spark.operators as OPS
     from scip_spark.plans.pipeline import BuildCaches
     from scip_spark.sources.filescan import attach_pixels
@@ -176,6 +207,7 @@ def test_fused_equals_unfused_stages_on_tiff_loader(tiff_fixture_meta, tiff_fixt
     finally:
         OPS.FUSE_STAGES = True
     assert len(fused) > 0
+    assert fused["group"].isna().all()
     pd.testing.assert_frame_equal(fused, unfused)
 
 

@@ -288,18 +288,23 @@ def _n_python_nodes(df, node="MapInPandas"):
     return df._jdf.queryExecution().analyzed().toString().count(node)
 
 
-def test_fused_build_decodes_in_one_python_worker(spark, tiff_fixture_meta, tiff_fixture_config):
-    """Over the TIFF loader, the relation the fused multi-branch build
-    persists is ONE mapInPandas above the cached metadata scan: decode,
-    typed nulls, illumination divide, segmentation, to_events and every
-    branch's masks share one Python worker per task."""
+@pytest.mark.parametrize("methods", [["otsu"], ["otsu", "li"]], ids=["otsu", "otsu-li"])
+def test_fused_build_decodes_in_one_python_worker(
+    spark, tiff_fixture_meta, tiff_fixture_config, methods
+):
+    """Over the TIFF loader, the one relation build persists is ONE
+    mapInPandas above the cached metadata scan, for one mask method as
+    for several: decode, typed nulls, illumination divide, segmentation,
+    to_events and every branch's masks share one Python worker per
+    task."""
     from scip_spark.plans.pipeline import BuildCaches, build
     from scip_spark.sources.filescan import attach_pixels
     from scip_spark.sources.tiffio import read_tiff
 
+    cfg = dict(tiff_fixture_config, mask=dict(tiff_fixture_config["mask"], methods=methods))
     caches = BuildCaches()
     try:
-        build(attach_pixels(tiff_fixture_meta, ["0", "1"], read_tiff), tiff_fixture_config, caches=caches)
+        build(attach_pixels(tiff_fixture_meta, ["0", "1"], read_tiff), cfg, caches=caches)
         (persisted,) = caches.frames
         assert _n_python_nodes(persisted) == 1
         assert _n_python_nodes(persisted, "FlatMapGroupsInPandas") == 0

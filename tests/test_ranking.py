@@ -36,6 +36,11 @@ def _cases():
         "one": [(9.0, 42)],
         # negative + duplicated values, shuffled keys
         "mixed": [(float(rng.choice([-3, -1, 0, 2, 2, 7])), k) for k in rng.sample(range(1000), 400)],
+        # heavy tie groups overlapping near-unique runs
+        "ties_and_runs": [
+            (v, k)
+            for k, v in enumerate([5] * 40 + list(range(100)) + [7] * 25 + list(range(50, 90)))
+        ],
     }
 
 
@@ -140,33 +145,6 @@ def test_exact_values_at_fracs_random_multisets(spark):
         for f in fracs:
             want = s[max(1, math.ceil(f * n)) - 1]
             assert got[f] == want, (trial, f, n, got[f], want)
-
-
-def test_global_rank_fan_levels_agree(spark):
-    """Multi-level offsets (fan>1) must produce the EXACT same ranks as
-    the single-level plan and the single-partition row_number oracle,
-    on a multiset with heavy ties and near-unique regions."""
-    from pyspark.sql import functions as F
-    from pyspark.sql.window import Window as W
-
-    from scip_spark.functions.ranking import with_global_rank
-
-    rows = [(i, float(v)) for i, v in enumerate(
-        [5] * 40 + list(range(100)) + [7] * 25 + [None] * 0 + list(range(50, 90))
-    )]
-    df = spark.createDataFrame(rows, ["k", "v"])
-    want = {
-        r.k: r.rn
-        for r in df.withColumn(
-            "rn", F.row_number().over(W.orderBy("v", "k"))
-        ).collect()
-    }
-    for fan in (1, 4, 8):
-        got = {
-            r.k: r.global_rank
-            for r in with_global_rank(df, "v", "k", fan=fan).collect()
-        }
-        assert got == want, f"fan={fan}"
 
 
 def _dyadic_rows(df):
