@@ -57,7 +57,7 @@ def test_build_caches_handle_releases_persisted_relations(spark, full_events_df)
     action reads; it must outlive build for the caller's action, so a
     BuildCaches handle takes ownership and releases every block
     afterwards — without it each pipeline build leaks a cached relation
-    for the session lifetime (ADVICE r6)."""
+    for the session lifetime."""
     from scip_spark.plans.pipeline import BuildCaches
 
     spark.catalog.clearCache()
@@ -91,8 +91,8 @@ def test_build_caches_handle_releases_persisted_relations(spark, full_events_df)
 
 
 def test_duplicate_mask_methods_collapse(full_events_df):
-    """r14 review: duplicate method names must collapse (the suffixed
-    branch columns would otherwise be duplicated and fail
+    """Duplicate method names must collapse (the suffixed branch
+    columns would otherwise be duplicated and fail
     AMBIGUOUS_REFERENCE)."""
     out = build(
         full_events_df,
